@@ -4,7 +4,7 @@ test:
 	python -m pytest tests/ -q
 
 bench:
-	python bench.py
+	python3 perfbench/run.py --workload provider_etl --seed 1 --seconds 10
 
 smoke:
 	python -c "import sys; sys.path.insert(0,'.'); \

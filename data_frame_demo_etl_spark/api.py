@@ -150,7 +150,7 @@ def transform_endpoint(
         return ProcessResult(
             success=validation.is_valid,
             message="transformed" if validation.is_valid else "validation_failed",
-            row_count=validation.row_count or transformed.count(),
+            row_count=validation.row_count,
             metrics={**metrics, "validation": asdict(validation)},
         )
     except Exception as exc:

@@ -344,8 +344,8 @@ def containment_pairs(
     threshold compared in integers (inter·10⁶ ≥ |A|·t·10⁶ — no float
     knife-edge). ⌈t·|A|⌉ uses the same exact integer ceiling as D4.
 
-    Scale note (MEASURED bound, scripts/scaling_boilerplate.py
-    --corpus hostile): the one-sided join's output is
+    Scale note (MEASURED bound, SCALING.md round-8 boilerplate
+    harness, hostile corpus): the one-sided join's output is
     Σ_h prefix_df(h)·df(h). Rare-first ordering keeps prefix_df small
     on natural corpora, but a corpus whose docs are DISTINCT texts
     built entirely from a tiny hot vocabulary (every shingle

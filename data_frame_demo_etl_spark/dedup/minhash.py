@@ -158,7 +158,7 @@ def cap_hot_buckets(
       drop. At boilerplate scale (one bucket holding most of the
       corpus) that single task is a straggler AQE cannot split (skew
       mitigation does not apply to window partitions). Kept for the
-      A/B harness (scripts/scaling_boilerplate.py) and for callers
+      A/B harness (SCALING.md round-8) and for callers
       whose downstream genuinely reuses the exchange on a
       known-bounded corpus."""
     if plan == "window":

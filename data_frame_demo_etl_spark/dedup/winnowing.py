@@ -129,7 +129,7 @@ def winnow_matches(
     (session.release_all_caches): the session owner releases between
     logical queries; long-lived callers invoking this directly should
     do the same. cap_plan="window" (legacy,
-    A/B harness scripts/scaling_boilerplate.py): one count window over
+    A/B harness, SCALING.md round-8): one count window over
     fp — reuses its exchange for the pair join, but buffers a
     boilerplate fingerprint's ENTIRE corpus-sized posting list in one
     task before dropping it, a straggler AQE cannot split."""

@@ -3,8 +3,10 @@ contract (reference src/schema.py, src/api/v1/engine.py:18-80):
 levels off / coerce / contract, required-field checks, typed coercion
 with per-field failure counts.
 
-Failure counting is a single aggregation pass (one scan), never a
-collect-and-inspect loop.
+Validation is one Spark action per plan at every level: a single
+aggregate row carries the input row count and one coercion-failure
+count per typed field, never a collect-and-inspect loop or a second
+count.
 """
 
 from __future__ import annotations
@@ -12,7 +14,7 @@ from __future__ import annotations
 from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 _TYPE_ALIASES = {
     "date": "timestamp",
@@ -44,48 +46,51 @@ class ValidationResult:
     coerced: DataFrame | None = None
 
 
-def coerce_field_types(df: DataFrame, type_map: Mapping[str, str]) -> tuple[DataFrame, DataFrame]:
+def _coerce(
+    df: DataFrame, type_map: Mapping[str, str]
+) -> tuple[DataFrame, list[tuple[str, Column]]]:
     """Coerce columns to declared types; returns (coerced_df,
-    failure_counts_df). Failure == non-null input that nulls out under
-    try_cast (engine.py:18-52 parity).
-
-    failure_counts_df has one row per coerced field:
-    (field, failures, rows).
-    """
+    [(field, failure_count_aggregate)]) for every non-string typed
+    field. Failure == non-null input that nulls out under try_cast
+    (engine.py:18-52 parity)."""
     out = df
     checks = []
-    n = F.count(F.lit(1))
     for col, spec in type_map.items():
-        if col not in df.columns:
-            continue
         target = _TYPE_ALIASES.get(str(spec).lower())
-        if target is None or target == "string":
-            if target == "string":
-                out = out.withColumn(col, F.col(col).cast("string"))
+        if col not in df.columns or target is None:
             continue
         src = F.col(col).cast("string")
+        if target == "string":
+            out = out.withColumn(col, src)
+            continue
         converted = (
             F.try_to_timestamp(src) if target == "timestamp" else src.try_cast(target)
         )
         out = out.withColumn(col, converted)
-        checks.append(
-            F.sum(
-                F.when(src.isNotNull() & converted.isNull(), 1).otherwise(0)
-            ).alias(f"__fail_{col}")
-        )
-    if not checks:
-        failures = df.sparkSession.createDataFrame([], "field string, failures bigint, rows bigint")
-        return out, failures
-    wide = df.agg(*checks, n.alias("__rows"))
-    coerced_cols = [c for c in type_map if c in df.columns and _TYPE_ALIASES.get(str(type_map[c]).lower()) not in (None, "string")]
-    stack_args = []
-    for c in coerced_cols:
-        stack_args.extend([F.lit(c), F.col(f"__fail_{c}")])
-    failures = wide.select(
-        F.stack(F.lit(len(coerced_cols)), *stack_args).alias("field", "failures"),
-        F.col("__rows").alias("rows"),
+        checks.append((col, F.count_if(src.isNotNull() & converted.isNull())))
+    return out, checks
+
+
+def _failure_aggregate(df: DataFrame, checks: list[tuple[str, Column]]) -> DataFrame:
+    """One row: __fail_<i> per check, then the input row count."""
+    return df.agg(
+        *[fail.alias(f"__fail_{i}") for i, (_, fail) in enumerate(checks)],
+        F.count(F.lit(1)).alias("rows"),
     )
-    return out, failures
+
+
+def coerce_field_types(df: DataFrame, type_map: Mapping[str, str]) -> tuple[DataFrame, DataFrame]:
+    """Coerce columns to declared types; returns (coerced_df,
+    failure_counts_df). failure_counts_df has one row per coerced
+    field: (field, failures, rows)."""
+    out, checks = _coerce(df, type_map)
+    per_field = F.array(
+        *[
+            F.struct(F.lit(c).alias("field"), F.col(f"__fail_{i}").alias("failures"))
+            for i, (c, _) in enumerate(checks)
+        ]
+    ).cast("array<struct<field:string,failures:bigint>>")
+    return out, _failure_aggregate(df, checks).select(F.inline(per_field), "rows")
 
 
 def validate_contract(
@@ -100,24 +105,31 @@ def validate_contract(
     - 'coerce': coerce declared types, report failures, stay valid.
     - 'contract': missing required fields or any coercion failure →
       SchemaContractError.
+
+    Runs ``df`` exactly once (one aggregate row), at every level.
     """
     level = (level or "coerce").lower()
-    if level == "off":
-        return ValidationResult(is_valid=True, row_count=df.count(), coerced=df)
-
-    missing = [f for f in required_fields if f not in df.columns]
+    missing = [] if level == "off" else [f for f in required_fields if f not in df.columns]
+    missing_errors = [{"column": c, "failure": "missing required column"} for c in missing]
     if missing and level == "contract":
-        raise SchemaContractError([{"column": c, "failure": "missing required column"} for c in missing])
+        raise SchemaContractError(missing_errors)
 
-    coerced, failures_df = coerce_field_types(df, field_types or {})
-    failures = [r.asDict() for r in failures_df.collect() if r["failures"]]
+    coerced, checks = (df, []) if level == "off" else _coerce(df, field_types or {})
+    row = _failure_aggregate(df, checks).first()
+    failures = [
+        {"field": c, "failures": row[i], "rows": row["rows"]}
+        for i, (c, _) in enumerate(checks)
+        if row[i]
+    ]
     if failures and level == "contract":
         raise SchemaContractError(failures)
 
-    errors = [{"column": c, "failure": "missing required column"} for c in missing]
-    errors += [{"column": r["field"], "failure": f"{r['failures']} coercion failures"} for r in failures]
+    errors = missing_errors + [
+        {"column": f["field"], "failure": f"{f['failures']} coercion failures"}
+        for f in failures
+    ]
     return ValidationResult(
-        is_valid=not missing, errors=errors, row_count=coerced.count(), coerced=coerced
+        is_valid=not missing, errors=errors, row_count=row["rows"], coerced=coerced
     )
 
 

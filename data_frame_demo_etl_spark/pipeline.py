@@ -4,7 +4,9 @@ ingest → normalize → transform → validate → export (+ quarantine).
 Parity: reference src/pipeline.py:120-184 (run_pipeline) and
 src/api/v1/engine.py:134-232 (transform_data), re-expressed as one
 lazy Catalyst plan — ingest/normalize/transform build a single
-DataFrame; only validate/export trigger jobs.
+DataFrame, which runs exactly twice per file: once for the one
+validate action (row count and coercion failures from a single
+aggregate row) and once for the write (output or quarantine).
 """
 
 from __future__ import annotations
@@ -101,14 +103,13 @@ def save_quarantine(
     (reference pipeline.py:61-84 parity, parquet instead of copies)."""
     quarantine_dir.mkdir(parents=True, exist_ok=True)
     stem = Path(source).stem or "source"
+    text = f"Validation failed for {source}\n{'-' * 50}\n{error_msg}\n"
     if df is not None:
         try:
             df.write.mode("overwrite").parquet(str(quarantine_dir / f"{stem}.parquet"))
-        except Exception:
-            pass
-    (quarantine_dir / f"{stem}.error.log").write_text(
-        f"Validation failed for {source}\n{'-' * 50}\n{error_msg}\n", encoding="utf-8"
-    )
+        except Exception as exc:
+            text += f"{'-' * 50}\nQuarantine parquet write failed: {exc}\n"
+    (quarantine_dir / f"{stem}.error.log").write_text(text, encoding="utf-8")
 
 
 def run_pipeline(
@@ -150,7 +151,7 @@ def run_pipeline(
             json.dumps(report, indent=2, default=str), encoding="utf-8"
         )
         return PipelineResult(True, "ok", output_path, result.row_count, metrics)
-    except Exception as exc:  # pragma: no cover - defensive
+    except Exception as exc:
         log.error("Critical pipeline error: %s", exc)
         if quarantine_dir:
             save_quarantine(None, source, Path(quarantine_dir), traceback.format_exc())

@@ -55,7 +55,7 @@ def get_spark(
 
 def materialize(df) -> None:
     """Fully execute a DataFrame, EVALUATING every output column — the
-    measurement action for bench.py and the scaling harnesses.
+    measurement action for perfbench's registry queries.
 
     ``.count()`` is NOT full execution: for counting, Catalyst prunes
     every unreferenced expression — it ELIMINATES a left outer join

@@ -109,6 +109,40 @@ def test_pipeline_quarantine_on_contract_failure(spark, tmp_path):
     assert ok.success
 
 
+def test_save_quarantine_logs_write_failure(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from data_frame_demo_etl_spark.pipeline import save_quarantine
+
+    @F.udf("long")
+    def boom(_):
+        raise ValueError("quarantine write boom")
+
+    df = spark.range(2).withColumn("x", boom("id"))
+    save_quarantine(df, "bad.csv", tmp_path, "contract violated")
+    log = (tmp_path / "bad.error.log").read_text()
+    assert "contract violated" in log
+    assert "Quarantine parquet write failed" in log
+    assert "quarantine write boom" in log
+
+
+def test_pipeline_missing_source_is_quarantined(spark, tmp_path):
+    from data_frame_demo_etl_spark.pipeline import run_pipeline
+
+    tpl = TemplateConfig(source_type="csv", columns=["sku", "amount"], provider_name="p")
+    qdir = tmp_path / "quarantine"
+    result = run_pipeline(
+        spark,
+        str(tmp_path / "missing.csv"),
+        tpl,
+        str(tmp_path / "out.parquet"),
+        quarantine_dir=str(qdir),
+    )
+    assert not result.success
+    log = (qdir / "missing.error.log").read_text()
+    assert "Traceback" in log and "missing.csv" in log
+
+
 def test_cli_youtube_with_fake_transport(spark, tmp_path, monkeypatch, capsys):
     import data_frame_demo_etl_spark.sources.youtube_api as yt
     from tests.test_youtube_api import fake_transport

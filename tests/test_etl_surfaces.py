@@ -145,12 +145,41 @@ def test_validate_levels(spark):
     res = validate_contract(df, field_types={"num": "int", "mixed": "int"}, level="coerce")
     assert res.is_valid
     assert any("coercion" in e["failure"] for e in res.errors)
+    assert res.row_count == 2
 
     with pytest.raises(SchemaContractError):
         validate_contract(df, field_types={"mixed": "int"}, level="contract")
     with pytest.raises(SchemaContractError):
         validate_contract(df, required_fields=["absent"], level="contract")
-    assert validate_contract(df, required_fields=["absent"], level="off").is_valid
+    assert validate_contract(df, field_types={"num": "int"}, level="contract").row_count == 2
+    off = validate_contract(df, required_fields=["absent"], level="off")
+    assert off.is_valid and off.row_count == 2
+
+
+@pytest.mark.parametrize(
+    "level,field_types",
+    [
+        ("off", None),
+        ("coerce", None),
+        ("coerce", {"num": "int", "when": "date"}),
+    ],
+)
+def test_validate_runs_its_input_once(spark, level, field_types):
+    """One Spark action per call: every input row passes the UDF
+    filter exactly once, whatever the level."""
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def keep(_):
+        seen.add(1)
+        return True
+
+    df = spark.createDataFrame(
+        [("1", "2024-01-01"), ("x", "2024-01-02"), ("3", "bad")], ["num", "when"]
+    ).filter(keep("num"))
+    res = validate_contract(df, field_types=field_types, level=level)
+    assert res.row_count == 3
+    assert seen.value == 3
 
 
 def test_concat_strict_schema_mismatch(spark):
