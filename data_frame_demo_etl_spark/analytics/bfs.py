@@ -78,7 +78,7 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = MAX_HOPS) -> Da
 
 def supplier_reach_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: hop distance from the seed nation's suppliers across the
-    strong co-purchase graph (shared memoized edge build) — the
+    strong co-purchase graph (the shared edge build) — the
     supply-chain blast-radius audit: if nation-0 suppliers are
     disrupted, who is 1, 2, 3 co-purchase hops away."""
     from ..sources.catalog import load_table

@@ -92,7 +92,7 @@ def label_propagation(edges: DataFrame, n_rounds: int = N_ROUNDS) -> DataFrame:
 
 def supplier_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: LPA communities of the strong supplier co-purchase graph
-    (the shared memoized edge build, triangles.copurchase_edges) —
+    (the shared edge build, triangles.copurchase_edges) —
     (supplier, community, n_members) after 3 synchronous rounds,
     ordered by supplier. Community ids are the winning node ids
     (stable across engines by the tie-break order)."""

@@ -134,7 +134,7 @@ WITH pairs AS MATERIALIZED (
 thresh AS (
   -- 90*n/100.0, not 0.9*n: the former is exact at integer multiples
   -- (0.9 has no finite binary form), matching the driver-side
-  -- ceil(90*n/100) in triangles._copurchase_edges.
+  -- ceil(90*n/100) in triangles.copurchase_edges_with_count.
   SELECT c FROM (
     SELECT c, ROW_NUMBER() OVER (ORDER BY c) AS rn, COUNT(*) OVER () AS n
     FROM pairs

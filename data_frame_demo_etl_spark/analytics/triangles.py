@@ -28,58 +28,33 @@ from ..sources.catalog import load_table
 
 
 # Shared edge contract: the strong co-purchase edge table is the input
-# of BOTH graph gates (triangles, k-core) and costs ~3-4s at sf1 —
-# paid TWICE in any combined run before round 6. The build is now
-# memoized per (application, sf_dir) as an eagerly-materialized
-# localCheckpoint: the first gate pays the build, every later consumer
-# reads the materialized partitions. Lifecycle: the checkpoint's
-# blocks live until release_copurchase_edges() (or session stop) —
-# edges are node-pair-sized (47k rows at sf0.1, 477k at sf1), a
-# bounded artifact by construction, same class as the session cache
-# policy's bounded aggregates (session.release_all_caches).
-_EDGE_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = {}
-
-
-def copurchase_edges_with_count(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, int]:
-    """(edges, n_edges) for the strong co-purchase graph — memoized;
-    n_edges comes free from the threshold histogram (no extra job)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    edges, pairs, n_edges = _copurchase_edges(spark, sf_dir)
-    edges = edges.localCheckpoint(eager=True)
-    pairs.unpersist()
-    _EDGE_CACHE[key] = (edges, n_edges)
-    return edges, n_edges
+# of every graph gate (triangles, k-core, BFS, communities, ...). The
+# pair table behind it is PERSISTED (it feeds both the driver-side
+# threshold histogram and the edge filter), so a later gate in the
+# same session rebuilds the identical plan and reads the pairs from
+# Spark's cache. Like every operator intermediate, it lives until the
+# session owner calls session.release_all_caches; edges are
+# node-pair-sized (47k rows at sf0.1, 477k at sf1), a bounded artifact
+# by construction.
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strong supplier co-purchase pairs (u < v); see `_copurchase_edges`.
-    Memoized + materialized — see the shared-edge-contract note above."""
+    """Strong supplier co-purchase pairs (u < v); see
+    `copurchase_edges_with_count`."""
     return copurchase_edges_with_count(spark, sf_dir)[0].select("u", "v")
 
 
 def copurchase_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(u, v, c) strong co-purchase pairs WITH the shared-order count
     that qualified them — the tie-strength weight link_prediction's
-    k-strongest-neighbor sparsification ranks by. Same memoized
-    checkpoint as `copurchase_edges` (the weight rides the cached
-    frame; unweighted consumers project it away for free)."""
+    k-strongest-neighbor sparsification ranks by (unweighted consumers
+    project it away for free)."""
     return copurchase_edges_with_count(spark, sf_dir)[0]
 
 
-def release_copurchase_edges() -> None:
-    """Drop the memoized edge builds (checkpoint blocks are freed once
-    the DataFrames are garbage-collected)."""
-    _EDGE_CACHE.clear()
-
-
-def _copurchase_edges(
+def copurchase_edges_with_count(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, int]:
+) -> tuple[DataFrame, int]:
     """Strong supplier co-purchase pairs (u < v): the top decile of
     pairs by shared-order count (co-occurrence ≥ the exact p90 order
     statistic), so the graph keeps real structure at ANY scale factor
@@ -95,13 +70,10 @@ def _copurchase_edges(
     ceil(0.9·n) lies inside the block of equal counts the cumulative
     histogram identifies.
 
-    Returns (edges, cached_pairs, n_edges) — the edge count read off
-    the histogram (Σ bucket sizes at counts ≥ threshold), so consumers
-    never pay an edges.count() job. The pair table stays persisted
-    (it feeds both the driver-side histogram and the edge filter);
-    the CALLER must unpersist `cached_pairs` once the edges have been
-    consumed — leaving it cached accumulates the largest intermediate
-    of the query across runs."""
+    Returns (edges, n_edges) — the edge count read off the histogram
+    (Σ bucket sizes at counts ≥ threshold), so consumers never pay an
+    edges.count() job. The pair table stays persisted (see the
+    shared-edge contract above)."""
     li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_suppkey")
     # Pair generation: collect the per-order supplier SET (one shuffle,
     # map-side partial), then expand the C(k,2) pairs IN-ROW with two
@@ -126,7 +98,7 @@ def _copurchase_edges(
     )
     n = sum(cnt for _, cnt in hist)
     if n == 0:
-        return pairs.select("u", "v", "c"), pairs, 0
+        return pairs.select("u", "v", "c"), 0
     pos = max(1, -(-90 * n // 100))
     cum, thresh = 0, hist[-1][0]
     for c_val, cnt in hist:
@@ -135,7 +107,7 @@ def _copurchase_edges(
             thresh = c_val
             break
     n_edges = sum(cnt for c_val, cnt in hist if c_val >= thresh)
-    return pairs.filter(F.col("c") >= thresh).select("u", "v", "c"), pairs, n_edges
+    return pairs.filter(F.col("c") >= thresh).select("u", "v", "c"), n_edges
 
 
 # Below: broadcast-build job latency > shuffle saved. Re-measured in
@@ -261,8 +233,8 @@ def count_triangles(edges: DataFrame, n_edges: int | None = None) -> DataFrame:
 
 def supplier_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: triangle census of the supplier co-purchase graph.
-    Consumes the SHARED memoized edge build (k-core reads the same
-    one), with n_edges carried from the histogram — the census itself
+    Consumes the SHARED edge build (k-core reads the same
+    cached pairs), with n_edges carried from the histogram — the census itself
     is one combined action."""
     edges, n_edges = copurchase_edges_with_count(spark, sf_dir)
     return count_triangles(edges.select("u", "v"), n_edges=n_edges)
@@ -519,7 +491,7 @@ def local_clustering(edges: DataFrame, k: int = CLUSTERING_TOP_K) -> DataFrame:
 def supplier_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate (G10): top-20 most-clustered suppliers of the strong
     co-purchase graph — the node-local companion of the G3 census
-    (same shared memoized edge build)."""
+    (same shared edge build)."""
     return local_clustering(copurchase_edges(spark, sf_dir))
 
 

@@ -123,7 +123,7 @@ def ingest_endpoint(
         df = _rows_to_df(spark, req.rows)
         df = DataEngine(spark).ingest(df, tpl)
         return ProcessResult(
-            success=True, message="ingested", row_count=df.count(),
+            success=True, message="ingested", row_count=len(req.rows),
             metrics={"columns": df.columns},
         )
     except Exception as exc:

@@ -113,18 +113,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-def dedup_minhash_xxhash64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB MinHash+LSH fast path (salted xxhash64 family, all
-    JVM-side integer hashing — no md5 strings). Benchmarked alongside
-    the md5 portable gate so the number the judge reads is the number
-    a cluster would see; recall vs exact Jaccard is pinned in pytest
-    (test_dedup.py)."""
-    docs = load_table(spark, "documents", sf_dir)
-    return minhash_near_dup_pairs(
-        docs, threshold=THRESHOLD, hash_fn="xxhash64", max_bucket_size=200
-    )
-
-
 def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB cluster path: sketch pairs (MinHash+LSH, portable
     md5 family) → connected components → (doc_id, cluster).
@@ -704,13 +692,6 @@ GROUP BY 1, 2, 3
 HAVING SUM(c) > 0
 ORDER BY split_a, split_b, is_leak
 """
-
-# Pre-merge names (round 6 registered the collapsed construction as
-# `split_leakage_check_fast` alongside the doc-level gate; round 7
-# merged them — the collapsed form IS the gate). Kept as aliases so
-# external scripts referencing the old name keep resolving.
-split_leakage_check_fast = split_leakage_check
-SPLIT_LEAKAGE_CHECK_FAST_SQL = SPLIT_LEAKAGE_CHECK_SQL
 
 
 def dedup_lsh_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:

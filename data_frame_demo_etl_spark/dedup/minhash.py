@@ -127,9 +127,7 @@ def band_buckets(sig_df: DataFrame, bands: int = 8, rows: int = 4, portable: boo
     return sig_df.select("doc", F.posexplode(band_hashes).alias("band", "bucket"))
 
 
-def cap_hot_buckets(
-    bb: DataFrame, max_bucket_size: int, plan: str = "anti"
-) -> DataFrame:
+def cap_hot_buckets(bb: DataFrame, max_bucket_size: int) -> DataFrame:
     """Drop (band, bucket) groups with more than `max_bucket_size`
     members before the pair-producing self-join. A boilerplate bucket
     of m docs costs m²/2 candidates — at corpus scale a single
@@ -138,38 +136,20 @@ def cap_hot_buckets(
     hot bucket (boilerplate-only docs, which exact-dedup upstream
     already collapses).
 
-    Two physically different plans, identical results:
-
-    - ``anti`` (default): groupBy-count the bucket sizes (map-side
-      partial aggregation — a hot bucket's count reduces to one row
-      per map task, its posting list is NEVER gathered), filter to the
-      over-cap keys (≤ total_postings / cap rows by construction),
-      left-anti join. No task ever buffers a hot posting list. The
-      join strategy is deliberately LEFT TO AQE: the over-cap key set
-      is bounded by postings/cap, not by a constant, and a
-      boilerplate-heavy 100 TB corpus can push it past any broadcast
-      limit — AQE broadcasts the anti side when its runtime size
-      allows (the common case, keeping the postings unshuffled) and
-      degrades to a shuffled anti-join when it does not, instead of
-      blowing the driver on a forced hint.
-    - ``window``: count window over (band, bucket) — one shuffle whose
-      hashpartitioning the downstream self-join reuses, but the window
-      buffers each bucket's ENTIRE posting list in one task before the
-      drop. At boilerplate scale (one bucket holding most of the
-      corpus) that single task is a straggler AQE cannot split (skew
-      mitigation does not apply to window partitions). Kept for the
-      A/B harness (SCALING.md round-8) and for callers
-      whose downstream genuinely reuses the exchange on a
-      known-bounded corpus."""
-    if plan == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "bucket")
-        return (
-            bb.withColumn("__bucket_n", F.count(F.lit(1)).over(w))
-            .filter(F.col("__bucket_n") <= max_bucket_size)
-            .drop("__bucket_n")
-        )
+    The cap groupBy-counts the bucket sizes (map-side partial
+    aggregation — a hot bucket's count reduces to one row per map
+    task, its posting list is NEVER gathered), filters to the over-cap
+    keys (≤ total_postings / cap rows by construction) and left-anti
+    joins them. No task ever buffers a hot posting list. The join
+    strategy is deliberately LEFT TO AQE: the over-cap key set is
+    bounded by postings/cap, not by a constant, and a
+    boilerplate-heavy 100 TB corpus can push it past any broadcast
+    limit — AQE broadcasts the anti side when its runtime size allows
+    (the common case, keeping the postings unshuffled) and degrades to
+    a shuffled anti-join when it does not, instead of blowing the
+    driver on a forced hint. (A count window over (band, bucket)
+    gives the same result but buffers each bucket's entire posting
+    list in one task — SCALING.md round-8.)"""
     hot = (
         bb.groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -201,7 +181,6 @@ def minhash_near_dup_pairs(
     hash_fn: str = "xxhash64",
     max_bucket_size: int | None = 200,
     target_recall: float | None = None,
-    cap_plan: str = "anti",
 ) -> DataFrame:
     """(id_a, id_b, est_jaccard) for candidate pairs whose estimated
     Jaccard >= threshold.
@@ -222,21 +201,12 @@ def minhash_near_dup_pairs(
     # shuffles for the same result). The hot-bucket cap bounds the
     # quadratic expansion: a bucket of m docs yields m(m-1)/2 pairs,
     # so buckets over the cap are dropped whole (their members still
-    # pair through their other, more selective bands).
-    #
-    # cap_plan="anti" (default) drops hot buckets BEFORE collect_list
-    # via cap_hot_buckets: the collect_list aggregation buffer is then
-    # ≤ cap by construction. cap_plan="agg" (legacy, A/B harness)
-    # filters on F.size AFTER collecting — correct, but a boilerplate
-    # bucket holding most of the corpus is gathered into ONE
-    # aggregation buffer just to be thrown away (partial collect_list
-    # merges still funnel the full list through one reduce task).
-    if max_bucket_size is not None and cap_plan == "anti":
-        bb = cap_hot_buckets(bb, max_bucket_size, plan="anti")
+    # pair through their other, more selective bands). The drop runs
+    # BEFORE collect_list, so its aggregation buffer is ≤ cap.
+    if max_bucket_size is not None:
+        bb = cap_hot_buckets(bb, max_bucket_size)
     buckets = bb.groupBy("band", "bucket").agg(F.collect_list("doc").alias("ms"))
     buckets = buckets.filter(F.size("ms") >= 2)
-    if max_bucket_size is not None and cap_plan != "anti":
-        buckets = buckets.filter(F.size("ms") <= max_bucket_size)
     # Materialize the sorted array as a real column BEFORE the lambda
     # (an expression referenced inside a HOF re-evaluates per element).
     buckets = buckets.select(F.sort_array("ms").alias("ms"))

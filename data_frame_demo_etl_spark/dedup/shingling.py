@@ -33,23 +33,6 @@ def shingles(text: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """Distinct 64-bit hashes of word n-gram shingles (array<long>).
-
-    Hashes the word tuple directly (``xxhash64(w_i, …, w_{i+n-1})``)
-    instead of materializing shingle strings — ~an order of magnitude
-    cheaper than slice+concat per position, and hash identity is all
-    the set-similarity operators need. ``F.get`` (0-based, null out of
-    range) keeps tail positions ANSI-safe; the slice drops them.
-    """
-    ws = word_array(text)
-    hs = F.transform(
-        ws, lambda w, i: F.xxhash64(w, *[F.get(ws, i + off) for off in range(1, n)])
-    )
-    valid = F.slice(hs, 1, F.greatest(F.size(ws) - (n - 1), F.lit(0)))
-    return F.array_distinct(valid)
-
-
 def shingle_hash_table(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:

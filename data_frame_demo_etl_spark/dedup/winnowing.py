@@ -110,7 +110,6 @@ def winnow_matches(
     w: int = WINDOW,
     min_shared: int = MIN_SHARED,
     max_docs_per_fp: int | None = MAX_DOCS_PER_FP,
-    cap_plan: str = "anti",
 ) -> DataFrame:
     """(id_a, id_b, n_shared): document pairs sharing at least
     ``min_shared`` winnowing fingerprints — the local-similarity /
@@ -119,42 +118,26 @@ def winnow_matches(
     (ubiquitous boilerplate carries no discriminating power and its
     posting list is quadratic — the LSH hot-bucket treatment).
 
-    cap_plan="anti" (default): groupBy-count the per-fingerprint doc
-    counts (map-side partial agg — no posting list is ever gathered),
-    left-anti join the over-cap fingerprints (≤ postings / cap rows;
-    join strategy left to AQE — see minhash.cap_hot_buckets for why
-    the broadcast must not be forced). The kernel output is PERSISTED
+    The cap groupBy-counts the per-fingerprint doc counts (map-side
+    partial agg — no posting list is ever gathered) and left-anti
+    joins the over-cap fingerprints (≤ postings / cap rows; join
+    strategy left to AQE — see minhash.cap_hot_buckets for why the
+    broadcast must not be forced). The kernel output is PERSISTED
     because both the count branch and the pair join consume it — the
     cache outlives this call by the library-wide lifecycle contract
     (session.release_all_caches): the session owner releases between
     logical queries; long-lived callers invoking this directly should
-    do the same. cap_plan="window" (legacy,
-    A/B harness, SCALING.md round-8): one count window over
-    fp — reuses its exchange for the pair join, but buffers a
-    boilerplate fingerprint's ENTIRE corpus-sized posting list in one
-    task before dropping it, a straggler AQE cannot split."""
+    do the same."""
     fps = winnow_fingerprints(df, id_col, text_col, k, w)
     if max_docs_per_fp is not None:
-        if cap_plan == "window":
-            from pyspark.sql import Window
-
-            cnt = F.count(F.lit(1)).over(Window.partitionBy("fp"))
-            fps = (
-                fps.withColumn("__n", cnt)
-                .filter(F.col("__n") <= max_docs_per_fp)
-                .drop("__n")
-            )
-        else:
-            # persist the bare kernel output: the hot-count branch and
-            # the pair join both consume it (session owner releases).
-            fps = fps.persist()
-            hot = (
-                fps.groupBy("fp")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .filter(F.col("__n") > max_docs_per_fp)
-                .select("fp")
-            )
-            fps = fps.join(hot, "fp", "left_anti")
+        fps = fps.persist()
+        hot = (
+            fps.groupBy("fp")
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > max_docs_per_fp)
+            .select("fp")
+        )
+        fps = fps.join(hot, "fp", "left_anti")
     a = fps.select(F.col("doc").alias("id_a"), "fp")
     b = fps.select(F.col("doc").alias("id_b"), "fp")
     return (
@@ -167,9 +150,7 @@ def winnow_matches(
     )
 
 
-def docs_winnowing_matches(
-    spark: SparkSession, sf_dir: str, cap_plan: str = "anti"
-) -> DataFrame:
+def docs_winnowing_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: winnowing fingerprint matching over `documents` — pairs
     sharing ≥ 3 fingerprints with the hot-fingerprint cap. Exercises
     the full local-fingerprint pipeline (rolling k-gram hashing,
@@ -195,7 +176,7 @@ def docs_winnowing_matches(
         .select("doc_id", "text")
         .repartition(spark_parts, "doc_id")
     )
-    return winnow_matches(reps, cap_plan=cap_plan).orderBy("id_a", "id_b")
+    return winnow_matches(reps).orderBy("id_a", "id_b")
 
 
 def _kr_hash_sql(k: int = K_CHARS) -> str:

@@ -69,7 +69,7 @@ class DataEngine:
             )
             return ValidationResponse(result.is_valid, result.errors, result.row_count)
         except SchemaContractError as exc:
-            return ValidationResponse(False, exc.failures, df.count())
+            return ValidationResponse(False, exc.failures, exc.row_count)
         except Exception as exc:  # pragma: no cover - defensive
             return ValidationResponse(False, [{"failure": str(exc)}], 0)
 

@@ -1,14 +1,9 @@
-"""Grouped-map transforms (``applyInPandas``) and skew-handling joins.
+"""Grouped-map transforms (``applyInPandas``).
 
 ``group_zscore`` is the canonical grouped-map shape for feature
 pipelines: per-group normalization where the whole group must be seen
 together. One shuffle on the group key; Arrow moves each group as a
 pandas frame.
-
-``salted_join`` is the classic skew mitigation when AQE's skew-join
-splitting isn't available or the skew is extreme: replicate the small
-side N times, scatter the big side's hot keys across N salt values,
-join on (key, salt). Semantics identical to a plain inner equi-join.
 """
 
 from __future__ import annotations
@@ -127,20 +122,3 @@ SELECT b.l_orderkey, b.l_returnflag, b.l_quantity,
 FROM base b JOIN gstd st ON b.l_returnflag = st.l_returnflag
 ORDER BY b.l_orderkey, b.l_returnflag, b.l_quantity
 """
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Moved: the canonical implementation lives in operators/skew.py
-    next to the profiler that tells you when to reach for it (and it
-    rejects right/full joins, which this earlier version would have
-    silently answered with n_salts× duplicated unmatched small rows).
-    This alias keeps the old import path working."""
-    from .skew import salted_join as _impl
-
-    return _impl(big, small, key, n_salts=n_salts, how=how)

@@ -47,28 +47,6 @@ def compact(
     return df.repartition(n_partitions, *cluster_cols).sortWithinPartitions(*cluster_cols)
 
 
-def write_with_bloom(
-    df: DataFrame,
-    path: str,
-    bloom_cols: Sequence[str],
-    expected_ndv: int = 1_000_000,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet with column-level Bloom filters. When data is NOT
-    clustered on a lookup key (so row-group min/max spans everything
-    and prunes nothing), a Bloom filter per row group still answers
-    "key definitely absent" — point lookups and selective IN-list
-    probes skip row groups that clustering can't. Complements
-    ``compact``: cluster on the primary access key, Bloom the
-    secondary ones. Measured effect: SCALING.md (bloom experiment)."""
-    writer = df.write.mode(mode)
-    for c in bloom_cols:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
-            f"parquet.bloom.filter.expected.ndv#{c}", str(expected_ndv)
-        )
-    writer.parquet(path)
-
-
 def zorder_value(x, y, bits: int = 16):
     """Morton/Z-order interleave of two non-negative ints (each
     truncated to ``bits`` low bits) as a pure column expression —

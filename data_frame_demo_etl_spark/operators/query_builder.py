@@ -66,7 +66,13 @@ class Filter:
     def to_sql(self) -> str:
         op = self.operator.lower()
         if op == "contains":
-            return f"{self.column} LIKE '%{self.value}%'"
+            # `contains` is a literal substring match: LIKE's wildcards
+            # (and the escape character itself) are escaped with `!`,
+            # not backslash, which Spark string literals would consume.
+            text = str(self.value)
+            escaped = text.replace("!", "!!").replace("%", "!%").replace("_", "!_")
+            like = f"{self.column} LIKE {_sql_literal(f'%{escaped}%')}"
+            return like if escaped == text else f"{like} ESCAPE '!'"
         if op == "in":
             items = ", ".join(_sql_literal(v) for v in self.value)
             return f"{self.column} IN ({items})"

@@ -1,46 +1,22 @@
-"""Per-key top-n with partition-local pruning.
+"""Per-key top-n as a rank window plus a rank filter.
 
 The textbook `row_number().over(partitionBy(key).orderBy(...))` plan
-shuffles EVERY row to its key's reducer before discarding all but n —
-at 100 TB that is the whole table through the exchange for a
-15-row answer. Top-n per key is a semigroup (the global top-n is
-contained in the union of per-partition top-ns), so a partition-local
-prune first bounds the shuffle at partitions × keys × n rows; the
-exact window then runs on that residue. Same trick Spark itself uses
-for global `orderBy().limit()` (TakeOrdered), generalized per key.
+would shuffle EVERY row to its key's reducer before discarding all but
+n. Spark (3.5+) recognizes the `rank <= n` filter over that window and
+plans a partial `WindowGroupLimit` BELOW the exchange: each map task
+keeps only its per-key top n, so the shuffle is bounded at
+partitions × keys × n rows, and the final window runs on that residue
+(the same trick as TakeOrdered for global `orderBy().limit()`).
 
-The pruning pass is `mapInPandas` over arbitrary column types; ties
-must be broken by the order columns into a total order for the result
-to be deterministic (same requirement the plain window has).
+Ties must be broken by the order columns into a total order for the
+result to be deterministic.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-
-
-def _partition_prune(keys: Sequence[str], order_by: Sequence[tuple[str, bool]], n: int):
-    cols = [c for c, _ in order_by]
-    asc = [a for _, a in order_by]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pool = pdf if best is None else pd.concat([best, pdf], ignore_index=True)
-            best = (
-                pool.sort_values(cols, ascending=asc, kind="mergesort")
-                .groupby(list(keys), sort=False)
-                .head(n)
-            )
-        if best is not None:
-            yield best
-
-    return gen
 
 
 def pruned_topn(
@@ -50,12 +26,10 @@ def pruned_topn(
     n: int,
 ) -> DataFrame:
     """Exact top-n rows per `keys`, ordered by `order_by`
-    [(column, ascending), ...], with a partition-local prune before
-    the window shuffle. Adds a `rank` column (1-based)."""
-    pruned = df.mapInPandas(_partition_prune(keys, order_by, n), df.schema)
+    [(column, ascending), ...]. Adds a `rank` column (1-based)."""
     order_cols = [F.col(c).asc() if a else F.col(c).desc() for c, a in order_by]
     w = Window.partitionBy(*keys).orderBy(*order_cols)
     return (
-        pruned.withColumn("rank", F.row_number().over(w).cast("long"))
+        df.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= n)
     )

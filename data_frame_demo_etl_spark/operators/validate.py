@@ -31,10 +31,12 @@ _TYPE_ALIASES = {
 
 
 class SchemaContractError(ValueError):
-    """Raised at level='contract' when the contract is violated."""
+    """Raised at level='contract' when the contract is violated;
+    ``row_count`` is the input row count from the same aggregate."""
 
-    def __init__(self, failures: list[dict]):
+    def __init__(self, failures: list[dict], row_count: int):
         self.failures = failures
+        self.row_count = row_count
         super().__init__(f"schema contract violated: {failures}")
 
 
@@ -111,8 +113,6 @@ def validate_contract(
     level = (level or "coerce").lower()
     missing = [] if level == "off" else [f for f in required_fields if f not in df.columns]
     missing_errors = [{"column": c, "failure": "missing required column"} for c in missing]
-    if missing and level == "contract":
-        raise SchemaContractError(missing_errors)
 
     coerced, checks = (df, []) if level == "off" else _coerce(df, field_types or {})
     row = _failure_aggregate(df, checks).first()
@@ -121,8 +121,8 @@ def validate_contract(
         for i, (c, _) in enumerate(checks)
         if row[i]
     ]
-    if failures and level == "contract":
-        raise SchemaContractError(failures)
+    if (missing or failures) and level == "contract":
+        raise SchemaContractError(missing_errors or failures, row["rows"])
 
     errors = missing_errors + [
         {"column": f["field"], "failure": f"{f['failures']} coercion failures"}

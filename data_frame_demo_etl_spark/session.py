@@ -1,10 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
 Design notes (100 TB intent): AQE enabled so runtime re-plans coalesce
-shuffle partitions and split skewed ones; explicit shuffle-partition
-default sized for the local harness but overridable via env/args for a
-real cluster; Arrow enabled for the few Pandas-UDF paths (multimodal,
-stateful streaming).
+shuffle partitions and split skewed ones; an explicit shuffle-partition
+default, overridable for a real cluster through the
+``SPARK_GRAFT_SHUFFLE`` environment variable (or ``extra_conf``);
+Arrow enabled for the few Pandas-UDF paths (multimodal, stateful
+streaming).
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 def get_spark(
     app_name: str = "data-frame-demo-etl-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults applied."""
@@ -30,7 +30,7 @@ def get_spark(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.shuffle.partitions": str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+        "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Python DataSource filter pushdown (xlsx_lite reader) is
         # opt-in as of Spark 4.1.
@@ -85,20 +85,21 @@ def materialize(df) -> None:
 
 
 def release_all_caches(spark: SparkSession) -> None:
-    """Drop every CacheManager entry in the session.
+    """Drop every CacheManager entry in the session — the one release
+    call for every operator's persisted intermediates.
 
     Cache lifecycle policy: library operators (minhash, jaccard, BM25,
-    TF-IDF, IVF, novelty, incremental dedup, the LLM pipeline) persist
+    TF-IDF, IVF, novelty, incremental dedup, the LLM pipeline, the
+    co-purchase pair table behind the graph gates) persist
     intermediates that feed the LAZY frame they return — the cache
     must outlive the function for the caller's action to benefit, so
     they cannot unpersist internally, and eager checkpointing inside a
     reusable operator would break downstream pushdown/pruning
-    composition. The contract is therefore: the SESSION owner releases
-    caches between logical queries in a long-lived session (the
-    per-round driver restarts its session; services should call this
-    between requests). Bounded one-row-per-key aggregates that are
-    consumed within a single gate (TPC-H Q11/Q15, the quarantine
-    readers) release their own caches via checkpoint-then-unpersist
-    instead.
+    composition. No operator keeps a private memo of its own. The
+    contract is therefore: the SESSION owner calls this between
+    logical queries in a long-lived session (services between
+    requests). Bounded one-row-per-key aggregates that are consumed
+    within a single gate (TPC-H Q11/Q15, the quarantine readers)
+    release their own caches via checkpoint-then-unpersist instead.
     """
     spark.catalog.clearCache()

@@ -69,57 +69,6 @@ def brute_force_topk(
     )
 
 
-def brute_force_topk_vectorized(
-    corpus: DataFrame,
-    queries_pd,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Arrow/numpy variant of brute-force top-k: the (small) query set
-    ships to every task as a dense matrix; each Arrow batch of corpus
-    vectors is scored with ONE matrix multiply instead of per-row
-    folds. At wide dimensions (≥ 256) this beats the JVM expression
-    path by the BLAS factor; kept alongside it since both are exact.
-
-    `queries_pd`: pandas DataFrame with (query_id_col, vec_col).
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_ids = queries_pd[query_id_col].to_numpy()
-    q_mat = np.stack(queries_pd[vec_col].to_list()).astype("float64")
-    q_norms = np.linalg.norm(q_mat, axis=1)
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            c_mat = np.stack(pdf[vec_col].to_list()).astype("float64")
-            c_norms = np.linalg.norm(c_mat, axis=1)
-            denom = np.outer(c_norms, q_norms)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom > 0, (c_mat @ q_mat.T) / denom, 0.0)
-            n_c, n_q = cos.shape
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.repeat(q_ids, n_c),
-                    id_col: np.tile(ids, n_q),
-                    "cosine": np.round(cos.T.ravel(), 6),
-                }
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, f"{query_id_col} long, {id_col} long, cosine double"
-    ).filter(F.col(id_col) != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", F.col(id_col).alias("neighbor_id"), "cosine")
-    )
-
-
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic random hyperplanes (fixed seed → reproducible)."""
     rng = np.random.RandomState(seed)

@@ -352,17 +352,6 @@ def write_jdbc(
     writer.mode(mode).save()
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
-    reader = spark.read
-    if schema:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 #: Deploy-time coordinate for the external Avro module (it ships with
 #: the Spark distribution's `--packages`, not the pyspark wheel — this
 #: container does not deploy it, which `avro_available` detects).

@@ -106,10 +106,6 @@ class TemplateConfig:
         return tpl
 
 
-def default_template_path(source: Path, suffix: str = "json") -> Path:
-    return source.with_name(f"{source.stem}.df-template.{suffix.lstrip('.')}")
-
-
 def locate_template(directory: Path, stem: str | None = None) -> Path:
     exts = ("json", "yaml", "yml")
     if stem:

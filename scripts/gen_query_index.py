@@ -46,7 +46,6 @@ REQUIRES = {
     "dedup_simhash": "bit_count (Spark 3.5+)",
     "events_hll_rollup": "hll_sketch_agg / hll_union_agg (Spark 3.5+)",
     "group_zscore": "applyInPandas + Arrow",
-    "dedup_minhash_xxhash64": "xxhash64 (Spark 3.0+); the md5 family is the portable path",
     "multimodal_decode_jpeg_progressive": "mapInPandas + Arrow (codec UDF)",
     "docs_winnowing_matches": "mapInPandas + Arrow (numpy Karp–Rabin kernel)",
     "events_parquet_pruning_audit": (

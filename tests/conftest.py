@@ -15,7 +15,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    extra = {}
+    extra = {"spark.sql.shuffle.partitions": os.environ.get("TEST_SHUFFLE", "4")}
     for kv in os.environ.get("TEST_EXTRA_CONF", "").split(","):
         if "=" in kv:
             k, v = kv.split("=", 1)
@@ -23,7 +23,6 @@ def spark():
     s = get_spark(
         app_name="tests",
         master=f"local[{os.environ.get('TEST_CPUS', '4')}]",
-        shuffle_partitions=int(os.environ.get("TEST_SHUFFLE", "4")),
         extra_conf=extra,
     )
     yield s

@@ -162,11 +162,13 @@ def test_validate_levels(spark):
         ("off", None),
         ("coerce", None),
         ("coerce", {"num": "int", "when": "date"}),
+        ("contract", {"num": "int", "when": "date"}),
     ],
 )
 def test_validate_runs_its_input_once(spark, level, field_types):
     """One Spark action per call: every input row passes the UDF
-    filter exactly once, whatever the level."""
+    filter exactly once, whatever the level — also when the contract
+    fails and DataEngine.validate_data reports the failure."""
     seen = spark.sparkContext.accumulator(0)
 
     @F.udf("boolean")
@@ -177,7 +179,15 @@ def test_validate_runs_its_input_once(spark, level, field_types):
     df = spark.createDataFrame(
         [("1", "2024-01-01"), ("x", "2024-01-02"), ("3", "bad")], ["num", "when"]
     ).filter(keep("num"))
-    res = validate_contract(df, field_types=field_types, level=level)
+    if level == "contract":
+        from data_frame_demo_etl_spark.engine import DataEngine
+
+        tpl = TemplateConfig(field_types=field_types)
+        res = DataEngine(spark).validate_data(df, tpl, level=level)
+        assert not res.is_valid
+        assert [e["field"] for e in res.errors] == ["num", "when"]
+    else:
+        res = validate_contract(df, field_types=field_types, level=level)
     assert res.row_count == 3
     assert seen.value == 3
 
@@ -308,6 +318,27 @@ def test_query_builder_in_between_or_apply(spark):
     assert via_df == via_sql == [(3, "y"), (8, "x")]
 
 
+@pytest.mark.parametrize("value", ["O'Brien", "50%", "a_b"])
+def test_query_builder_contains_is_literal(spark, value):
+    """`contains` matches a literal substring on every render path:
+    quotes, `%` and `_` in the value are not SQL syntax or wildcards,
+    so apply(), Spark on to_sql() and DuckDB on to_sql() agree."""
+    import duckdb
+
+    rows = [(1, "O'Brien"), (2, "OBrien"), (3, "50%"), (4, "500"),
+            (5, "a_b"), (6, "axb"), (7, "x!y")]
+    df = spark.createDataFrame(rows, "id long, s string")
+    df.createOrReplaceTempView("qb_contains")
+    spec = QuerySpec(filters=(Filter("s", "contains", value),), order_by=("id",))
+    sql = spec.to_sql("qb_contains")
+    con = duckdb.connect()
+    con.register("qb_contains", pd.DataFrame(rows, columns=["id", "s"]))
+    via_df = [tuple(r) for r in spec.apply(df).collect()]
+    via_spark = [tuple(r) for r in spark.sql(sql).collect()]
+    via_duckdb = [tuple(r) for r in con.execute(sql).fetchall()]
+    assert via_df == via_spark == via_duckdb == [r for r in rows if value in r[1]]
+
+
 def test_group_zscore(spark):
     from data_frame_demo_etl_spark.operators.grouped import group_zscore
 
@@ -323,16 +354,6 @@ def test_group_zscore(spark):
     expected = [-1.2247448713915892, 0.0, 1.2247448713915892]
     assert all(math.isclose(a, b, rel_tol=1e-9) for a, b in zip(zs, expected))
     assert by_g["b"][0].zscore == 0.0  # zero-variance group
-
-
-def test_salted_join_equivalence(spark):
-    from data_frame_demo_etl_spark.operators.grouped import salted_join
-
-    big = spark.createDataFrame([(i % 3, i) for i in range(100)], ["k", "v"])
-    small = spark.createDataFrame([(0, "x"), (1, "y"), (2, "z")], ["k", "name"])
-    plain = {(r.k, r.v, r.name) for r in big.join(small, "k").collect()}
-    salted = {(r.k, r.v, r.name) for r in salted_join(big, small, "k", n_salts=4).collect()}
-    assert plain == salted and len(salted) == 100
 
 
 def test_approx_stats_accuracy(spark, sf_oracle_dir):

@@ -41,6 +41,25 @@ def test_kcore_fixed_rounds_are_idempotent_on_fixture(spark, sf_dir):
     assert r_default == r_more, "fixture did not converge inside DEFAULT_ROUNDS"
 
 
+def test_release_all_caches_frees_the_copurchase_pairs(spark, sf_dir):
+    """The co-purchase pair table behind every graph gate is an
+    ordinary session cache entry: one release_all_caches call frees
+    every block the edge build left persisted."""
+    from data_frame_demo_etl_spark.analytics.triangles import copurchase_edges
+    from data_frame_demo_etl_spark.session import release_all_caches
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    release_all_caches(spark)
+    before = persisted()
+    copurchase_edges(spark, sf_dir).count()
+    built = persisted() - before
+    assert built
+    release_all_caches(spark)
+    assert not persisted() & built
+
+
 def test_supplier_kcore_gate_schema(spark, sf_dir):
     out = supplier_kcore(spark, sf_dir)
     assert out.columns == ["node", "deg"]

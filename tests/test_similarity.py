@@ -35,25 +35,6 @@ def test_lsh_topk_subset_of_bruteforce_candidates(spark, sf_dir):
         assert abs(exact[(r.query_id, r.neighbor_id)] - r.cosine) < 1e-9
 
 
-def test_vectorized_matches_expression_path(spark, sf_dir):
-    from data_frame_demo_etl_spark.similarity.ann import brute_force_topk_vectorized
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    q = emb.filter(F.col("vec_id") < 3).select(F.col("vec_id").alias("query_id"), "embedding")
-    expr_path = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in brute_force_topk(emb, q, k=5).collect()
-    }
-    np_path = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in brute_force_topk_vectorized(emb, q.toPandas(), k=5).collect()
-    }
-    assert set(expr_path) == set(np_path)
-    for key, (nid, cos) in expr_path.items():
-        nid2, cos2 = np_path[key]
-        assert nid == nid2 and abs(cos - cos2) <= 1e-6
-
-
 def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     from data_frame_demo_etl_spark.similarity.ivf import fit_ivf, ivf_topk
 

@@ -124,6 +124,26 @@ def test_pruned_topn_equals_plain_window(spark):
     assert got == ref and len(ref) == 35
 
 
+def test_pruned_topn_prunes_below_the_exchange(spark):
+    """Spark plans the per-partition prune itself: a Partial
+    WindowGroupLimit sits below the key exchange, and no Python
+    operator (mapInPandas or a Python UDF) runs in the plan."""
+    from data_frame_demo_etl_spark.operators.topn import pruned_topn
+
+    rows = [(i % 7, i, float(i % 50)) for i in range(200)]
+    df = spark.createDataFrame(rows, ["k", "id", "v"]).repartition(4)
+    top = pruned_topn(df, ["k"], [("v", False), ("id", True)], n=5)
+    plan = top._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln)
+    partial = [
+        i for i, ln in enumerate(lines)
+        if "WindowGroupLimit" in ln and ln.rstrip().endswith("Partial")
+    ]
+    assert partial and partial[0] > exchange, plan
+    assert "MapInPandas" not in plan and "PythonUDF" not in plan, plan
+
+
 def test_key_skew_profile_detects_hot_key(spark):
     """A planted hot key dominates max_count and top_share; a uniform
     key distribution reports max ~= p50."""
