@@ -22,8 +22,10 @@ OPERATORS = ("=", "!=", ">", ">=", "<", "<=", "contains", "in", "between")
 
 def _sql_literal(val: object) -> str:
     if isinstance(val, str):
-        escaped = val.replace("'", "''")
-        return f"'{escaped}'"
+        # Spark string literals read `\` as an escape character and
+        # DuckDB's do not, so each backslash is spliced in as chr(92).
+        parts = ["'" + p.replace("'", "''") + "'" for p in val.split("\\")]
+        return parts[0] if len(parts) == 1 else "(" + " || chr(92) || ".join(parts) + ")"
     if isinstance(val, bool):
         return "TRUE" if val else "FALSE"
     return repr(val)
@@ -67,12 +69,13 @@ class Filter:
         op = self.operator.lower()
         if op == "contains":
             # `contains` is a literal substring match: LIKE's wildcards
-            # (and the escape character itself) are escaped with `!`,
-            # not backslash, which Spark string literals would consume.
+            # (and the escape character itself) are escaped with `!`;
+            # `ESCAPE '!'` also keeps Spark's LIKE from reading a
+            # backslash as its default escape character.
             text = str(self.value)
             escaped = text.replace("!", "!!").replace("%", "!%").replace("_", "!_")
             like = f"{self.column} LIKE {_sql_literal(f'%{escaped}%')}"
-            return like if escaped == text else f"{like} ESCAPE '!'"
+            return like if escaped == text and "\\" not in text else f"{like} ESCAPE '!'"
         if op == "in":
             items = ", ".join(_sql_literal(v) for v in self.value)
             return f"{self.column} IN ({items})"

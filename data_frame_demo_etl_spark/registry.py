@@ -6,29 +6,8 @@ expressible registers both a Spark implementation and an oracle;
 non-SQL-expressible ops register with ``oracle=None`` (rows-only
 check).
 
-ORDER MATTERS: the external driver correctness gate checks the FIRST
-50 registered queries (registration order == dict order). The window
-is ROTATED each round so queries that have never received an external
-green row get one, while a spine of category-representative keepers
-stays in every round. See TIER_ROTATION.md for the per-round history
-of which queries were driver-verified when.
-
-As of round 6 the rotation is expressed as an explicit name list
-(``_R12_WINDOW`` at the bottom of this module) that REORDERS the
-registry dict after all registrations — the physical layout of the
-``register()`` calls no longer encodes the window, the list does.
-Round-11 window composition:
-- the 18 round-10 second-block additions (never externally
-  verified; judge-verified 18/18 in the r10 verdict session) plus
-  the 6 gates added in round 11 (PQ/IVFADC anchor gates, AP,
-  log-rank, HITS, Brier);
-- the 12-keeper category spine (TPC-H, ETL, text, dedup, ANN,
-  streaming, temporal, sources, sampling, the LLM flagship);
-- backfill rows whose newest external green is oldest (the r4-era
-  remainder the r9 rotation displaced, in registration order).
-Every other query is driver-green r3–r10 against its current
-definition and sits in tier 2, still fully covered by pytest + the
-local oracle harness.
+``queries()`` and ``oracle_sql()`` return entries in registration
+order.
 """
 
 from __future__ import annotations
@@ -141,17 +120,7 @@ def _group_zscore_gate(spark, sf_dir):
         "l_orderkey", "l_returnflag", "l_quantity"
     )
 
-# ═══════════════════ TIER 1: driver window (50) ═══════════════════
-# Round-5 rotation: the 12 r4-era additions that have never received
-# an external green row (TIER_ROTATION.md "Round-5 window draft") —
-# after this round EVERY registered query has an external green row
-# against its current definition — plus the 12-keeper category spine
-# and backfill with the queries whose NEWEST green row is oldest
-# (3 r1-era + the first 23 r2-era in registration order).
 
-# Late imports used by tier-1 rows (kept next to their rows in the
-# pre-rotation layout; hoisted here so the window block is pure
-# register() calls).
 from .operators.grouped import GROUP_ZSCORE_GRID_SQL  # noqa: E402
 from .analytics.triangles import SUPPLIER_TRIANGLES_SQL, supplier_triangles  # noqa: E402
 from .multimodal.audio_ops import (  # noqa: E402
@@ -163,7 +132,6 @@ from .multimodal.binary_ops import (  # noqa: E402
     multimodal_video_frames,
 )
 
-# --- r4-era additions, never externally verified --- 12
 register(
     "dedup_clusters_minhash",
     dedup_gate.dedup_clusters_minhash,
@@ -209,7 +177,6 @@ register("multimodal_decode_real", multimodal_decode_real, MULTIMODAL_DECODE_REA
 register("multimodal_audio_stats", multimodal_audio_stats, MULTIMODAL_AUDIO_STATS_SQL)
 register("multimodal_video_frames", multimodal_video_frames, MULTIMODAL_VIDEO_FRAMES_SQL)
 
-# --- KEEPERS: category spine --- 24
 register("q1_pricing_summary", tpch.q1_pricing_summary, tpch.Q1_SQL)
 register("revenue_by_region", tpch.revenue_by_region, tpch.REVENUE_BY_REGION_SQL)
 register("llm_prep_pipeline", pipelines_llm.llm_prep_pipeline, pipelines_llm.LLM_PREP_PIPELINE_SQL)
@@ -227,7 +194,6 @@ register("ingest_csv_template", src_gate.ingest_csv_template, src_gate.INGEST_CS
 register("pipeline_e2e", src_gate.pipeline_e2e, src_gate.PIPELINE_E2E_SQL)
 register("sample_documents", ops_gate.sample_documents, ops_gate.SAMPLE_DOCUMENTS_SQL)
 
-# --- backfill: newest external row is oldest (r1/r2-era) --- 50
 register("text_repetition_score", fn_gate.text_repetition_score, fn_gate.TEXT_REPETITION_SCORE_SQL)
 register("text_chunking", fn_gate.text_chunking, fn_gate.TEXT_CHUNKING_SQL)
 register("docs_with_embeddings", fn_gate.docs_with_embeddings, fn_gate.DOCS_WITH_EMBEDDINGS_SQL)
@@ -270,12 +236,6 @@ from .functions.unigram import (  # noqa: E402
 register("unigram_lm_vocab", unigram_lm_vocab, UNIGRAM_LM_VOCAB_SQL)
 register("docs_unigram_tokens", docs_unigram_tokens, DOCS_UNIGRAM_TOKENS_SQL)
 register("dedup_simhash", dedup_gate.dedup_simhash, dedup_gate.DEDUP_SIMHASH_SQL)
-
-# (The physical tier-1 block above is the ROUND-5 window; the round-6
-# window is imposed by the _R8_WINDOW reorder at the bottom of this
-# module, which is also where TIER1_NAMES is defined.)
-
-# ═══════════ TIER 2: externally green vs current definition ═══════════
 
 register(
     "q9_product_type_profit", tpch_more.q9_product_type_profit, tpch_more.Q9_PRODUCT_TYPE_PROFIT_SQL
@@ -485,8 +445,7 @@ register(
     pipelines_llm.LLM_PREP_KEEP_BEST_SQL,
 )
 
-# ---- round-5 additions (registered AFTER the frozen 50-query driver
-# window; externally verifiable in the round-6 rotation) ----
+# ---- round-5 additions ----
 register("events_ohlc_hourly", timeseries.events_ohlc_hourly, timeseries.EVENTS_OHLC_HOURLY_SQL)
 register("events_ewma", timeseries.events_ewma, timeseries.EVENTS_EWMA_SQL)
 
@@ -626,7 +585,7 @@ from .analytics.trend import EVENTS_THEILSEN_TREND_SQL, events_theilsen_trend  #
 
 register("events_theilsen_trend", events_theilsen_trend, EVENTS_THEILSEN_TREND_SQL)
 
-# ---- round-6 additions (tier 2 until a future rotation) ----
+# ---- round-6 additions ----
 # (`split_leakage_check_fast` was registered here in round 6; round 7
 # merged it INTO `split_leakage_check` — the signature-collapsed
 # construction is now the gate itself, registered above.)
@@ -713,8 +672,7 @@ register(
     fn_gate.DOCS_TOKEN_FERTILITY_SQL,
 )
 
-# --- round-7 additions (registered after the r7 window list froze;
-#     first-priority rotation targets for the r8 window) ---
+# --- round-7 additions ---
 from .multimodal.binary_ops import (  # noqa: E402
     MULTIMODAL_DECODE_JPEG_PROGRESSIVE_SQL,
     multimodal_decode_jpeg_progressive,
@@ -760,8 +718,7 @@ register(
     EVENTS_PARQUET_PRUNING_AUDIT_SQL,
 )
 
-# --- round-8 additions (registered after the r8 window list froze;
-#     first-priority rotation targets for the r9 window) ---
+# --- round-8 additions ---
 
 from .dedup.substring import (  # noqa: E402
     DOCS_EXACT_SUBSTRING_MASS_SQL,
@@ -1235,8 +1192,7 @@ register(
     "docs_duplication_profile", docs_duplication_profile, DOCS_DUPLICATION_PROFILE_SQL
 )
 
-# ─── round-11 additions (registered BEFORE the window reorder so the
-#     rotation list below can pull them in) ───
+# ─── round-11 additions ───
 from .similarity.pq import PQ_ADC_TOPK_SQL, pq_adc_topk_gate
 from .similarity.ivfpq import IVFPQ_ADC_TOPK_SQL, ivfpq_adc_topk_gate
 
@@ -1367,7 +1323,7 @@ from .analytics.quality_audit import EVENTS_AB_FDR_SQL, events_ab_fdr
 
 register("events_ab_fdr", events_ab_fdr, EVENTS_AB_FDR_SQL)
 
-# ── round-12 post-window additions (first r13 rotation targets) ──
+# ── round-12 additions ──
 
 from .similarity.ivf import ANN_DELETE_COMPACT_SQL, ann_delete_compact
 
@@ -1380,89 +1336,3 @@ register("events_cvm_test", events_cvm_test, EVENTS_CVM_TEST_SQL)
 from .functions.vocab import DOCS_KEYPHRASE_TERMS_SQL, docs_keyphrase_terms
 
 register("docs_keyphrase_terms", docs_keyphrase_terms, DOCS_KEYPHRASE_TERMS_SQL)
-
-# ═══════════════ ROUND-12 DRIVER WINDOW (explicit rotation) ═══════════════
-# The driver verifies the FIRST 50 dict entries; this list IS the
-# round-12 window (TIER_ROTATION.md "Round-12 window"). Rotation
-# targets first: the 6 round-11 post-window additions (judge-verified
-# 6/6 in the r11 verdict session, never yet in a driver window), then
-# every gate ADDED during round 12, then the keeper spine, then
-# backfill whose newest external green row is oldest (the r4-era
-# remainder per TIER_ROTATION.md, then the r5-era block in
-# CORRECTNESS_r05 order).
-_R12_WINDOW: tuple[str, ...] = (
-    # --- rotation targets: r11 post-window additions, never
-    #     externally verified (6)
-    "events_windowed_topk",
-    "events_rater_mcnemar",
-    "pq_recall_eval",
-    "supplier_link_prediction",
-    "events_value_mase",
-    "funnel_step_significance",
-    # --- new in r12 (10): the PR operating-point curve, incremental
-    #     ANN admission, local clustering + assortativity, NDCG,
-    #     Cliff's delta, TF-IDF source terms, dwell-time transitions,
-    #     seasonal strength, and BH-FDR over the A/B family
-    "events_value_pr_curve",
-    "ann_incremental_admit",
-    "supplier_clustering_coefficient",
-    "supplier_degree_assortativity",
-    "events_value_ndcg",
-    "events_cliffs_delta",
-    "docs_tfidf_terms",
-    "events_dwell_transitions",
-    "events_seasonal_strength",
-    "events_ab_fdr",
-    # --- keeper spine (12, unchanged from r10/r11)
-    "q1_pricing_summary",
-    "revenue_by_region",
-    "llm_prep_pipeline",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "clean_transform",
-    "events_sessionize",
-    "asof_view_before_purchase",
-    "ann_cosine_topk",
-    "ingest_csv_template",
-    "pipeline_e2e",
-    "sample_documents",
-    # --- backfill (22): oldest newest-green rows — the r4-era
-    #     remainder (TIER_ROTATION order), then the r5-era block head
-    #     (CORRECTNESS_r05 order)
-    "events_pivot",
-    "events_gapfill",
-    "fuzzy_name_pairs",
-    "top_terms_per_source",
-    "events_hypertable_rollup",
-    "revenue_rollup",
-    "events_engagement",
-    "cdc_apply_changes",
-    "winsorize_prices",
-    "scd2_customer_history",
-    "q11_important_stock",
-    "skew_salted_brand_revenue",
-    "docs_sequence_packing",
-    "events_variant_extract",
-    "events_hll_rollup",
-    "events_interpolate",
-    "events_session_window",
-    "multimodal_decode_real",
-    "multimodal_audio_stats",
-    "multimodal_video_frames",
-    "text_repetition_score",
-    "text_chunking",
-)
-
-assert len(_R12_WINDOW) == 50, f"driver window must hold exactly 50, got {len(_R12_WINDOW)}"
-_missing = [n for n in _R12_WINDOW if n not in _REGISTRY]
-assert not _missing, f"window names not registered: {_missing}"
-
-_rotated = {n: _REGISTRY[n] for n in _R12_WINDOW}
-_rotated.update({n: e for n, e in _REGISTRY.items() if n not in _rotated})
-_REGISTRY.clear()
-_REGISTRY.update(_rotated)
-
-#: The driver-window queries, in (post-rotation) registration order
-#: (consumed by the plan-contract test, which holds every windowed
-#: plan to the scan/join/shuffle shape we want at 100 TB).
-TIER1_NAMES: tuple[str, ...] = _R12_WINDOW

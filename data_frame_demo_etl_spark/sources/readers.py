@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from ..template_config import TemplateConfig
+from . import xlsx_lite
 
 
 def _pandas_dtype_to_spark(dtype) -> object:
@@ -57,15 +58,6 @@ def _read_one_csv(path: str, tpl: TemplateConfig, nrows: int | None = None) -> p
         encoding=tpl.encoding,
         nrows=nrows,
     )
-
-
-def _col_letter(n: int) -> str:
-    """1-based column number → Excel letters (1→A, 27→AA)."""
-    s = ""
-    while n > 0:
-        n, r = divmod(n - 1, 26)
-        s = chr(65 + r) + s
-    return s
 
 
 def _effective_header_row(header_row: int, skiprows) -> int:
@@ -101,12 +93,12 @@ def expand_merged_headers(
         merged_detected = True
         base_empty = base_value in (None, "")
         placeholder = (
-            f"merged_{_col_letter(min_col)}{min_row}" if base_empty else str(base_value)
+            f"merged_{xlsx_lite._col_letters(min_col)}{min_row}" if base_empty else str(base_value)
         )
         for col in range(min_col, max_col + 1):
             value = placeholder
             if base_empty and max_col > min_col:
-                value = f"{placeholder}_{_col_letter(col)}"
+                value = f"{placeholder}_{xlsx_lite._col_letters(col)}"
             idx = col - 1
             while len(headers) <= idx:
                 headers.append("")
@@ -152,8 +144,6 @@ def _read_one_excel_lite(path: str, tpl: TemplateConfig, nrows: int | None = Non
     (``xlsx_lite``), with pandas ``read_excel`` semantics: skiprows
     drops physical rows (0-based), header_row indexes the remaining
     rows, merged title regions expand per ``expand_merged_headers``."""
-    from . import xlsx_lite
-
     sheets = (
         tpl.sheets if (tpl.combine_sheets and tpl.sheets) else [tpl.sheet if tpl.sheet is not None else 0]
     )

@@ -39,6 +39,7 @@ def _col_index(letters: str) -> int:
 
 
 def _col_letters(n: int) -> str:
+    """1-based column number → Excel letters (1→A, 27→AA)."""
     s = ""
     while n > 0:
         n, r = divmod(n - 1, 26)

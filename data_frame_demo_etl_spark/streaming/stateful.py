@@ -145,82 +145,3 @@ def sessionize_stateful(events_stream: DataFrame, gap_minutes: int = SESSION_GAP
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-# ─────────────── transformWithState (Spark 4 successor) ───────────────
-# Spark 4 supersedes applyInPandasWithState with the StatefulProcessor
-# API (SPARK-46815, "arbitrary stateful processing v2"): typed state
-# handles (value/list/map), timers, and TTL instead of a single
-# GroupState tuple. The sessionizer below is the same fold on the new
-# API; `sessionize_stateful` stays as the legacy-API reference and the
-# two are pinned equal in tests/test_streaming_advanced.py. Requires
-# the RocksDB state store provider (transformWithState rejects the
-# default HDFS-backed one) AND the `protobuf` package — PySpark's
-# transform_with_state_driver_worker speaks a protobuf state protocol
-# to the JVM state server. Environments without protobuf (this
-# sandbox) can't RUN it, so the equality test skips there and
-# `sessionize_stateful` remains the executable default; the code
-# below is the supported-API form a cluster with protobuf runs as-is.
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-
-
-class SessionProcessor(StatefulProcessor):
-    """Per-user session fold on the transformWithState API. State is
-    one ValueState tuple (start, last, n, vsum) — identical layout to
-    the legacy STATE_SCHEMA, so semantics carry over verbatim."""
-
-    def __init__(self, gap_sec: int = SESSION_GAP_MIN * 60):
-        self._gap_us = gap_sec * 1_000_000
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._session = handle.getValueState("session", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        held = self._session.get() if self._session.exists() else None
-        start_us, last_us, n, vsum = held if held is not None else (None, None, 0, 0.0)
-
-        closed: list[dict[str, Any]] = []
-        for pdf in rows:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for ts, value in zip(pdf["ts"], pdf["value"]):
-                ts_us = int(ts.value // 1000)
-                if last_us is not None and (ts_us - last_us) > self._gap_us:
-                    closed.append(
-                        {
-                            "user_id": user_id,
-                            "session_start": pd.Timestamp(start_us * 1000),
-                            "session_end": pd.Timestamp(last_us * 1000),
-                            "n_events": n,
-                            "value_sum": round(vsum, 4),
-                        }
-                    )
-                    start_us, n, vsum = ts_us, 0, 0.0
-                if start_us is None:
-                    start_us = ts_us
-                last_us = ts_us
-                n += 1
-                vsum += float(value) if value == value else 0.0
-
-        self._session.update((start_us, last_us, n, vsum))
-        if closed:
-            yield pd.DataFrame(closed)
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_stateful_tws(
-    events_stream: DataFrame, gap_minutes: int = SESSION_GAP_MIN
-) -> DataFrame:
-    """`sessionize_stateful` on the supported-going-forward API."""
-    return events_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(gap_minutes * 60),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

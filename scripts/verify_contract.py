@@ -1,51 +1,30 @@
 """Drive the driver contract: every queries() entry vs its oracle at
-sf0.01 with TYPED comparison (sorted columns, per-column dtype, sorted
-row tuples) — the same signal the external correctness gate records.
+sf0.01 through the comparison tier-1 parity uses
+(``tests/oracle_harness.compare``: sorted columns, row count,
+per-column dtype, sorted row values).
 
 Usage: python scripts/verify_contract.py [sf_dir] [name ...]
-Prints one line per query: OK/ROWS/SCHEMA/HASH/ERR, then a summary.
+Prints one line per query: OK/BAD/ROWS/ERR, then a summary.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-import pandas as pd  # noqa: E402
-
 import __spark_entry__ as E  # noqa: E402
 from data_frame_demo_etl_spark.session import get_spark, release_all_caches  # noqa: E402
-from data_frame_demo_etl_spark.sources.catalog import TABLES  # noqa: E402
-
-
-def typed_hash(df: pd.DataFrame) -> str:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        # ns-vs-us timestamp resolution is a pandas-bridge artifact the
-        # driver tolerates (r1 passed datetime queries): normalize.
-        if str(df[c].dtype).startswith("datetime64"):
-            df[c] = df[c].astype("datetime64[us]")
-    h = hashlib.sha256()
-    for c in df.columns:
-        h.update(f"{c}:{df[c].dtype}".encode())
-    body = df.apply(lambda r: tuple(str(v) for v in r), axis=1).tolist() if len(df) else []
-    for row in sorted(body):
-        h.update(("|".join(row) + "\n").encode())
-    return h.hexdigest()
+from tests.oracle_harness import compare, duckdb_connection  # noqa: E402
 
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark(app_name="verify_contract")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    con = duckdb_connection(sf)
 
     qs, oracles = E.queries(), E.oracle_sql()
     n_ok = n_bad = n_noracle = 0
@@ -57,38 +36,22 @@ def main() -> int:
         # cache; the long-lived checker releases them between queries.
         release_all_caches(spark)
         try:
-            sdf = fn(spark, sf).toPandas()
+            df = fn(spark, sf)
+            if name not in oracles:
+                print(f"ROWS  {name}: rows={len(df.toPandas())} (no oracle)")
+                n_noracle += 1
+                continue
+            report = compare(df, con, oracles[name], name=name)
         except Exception:
-            print(f"ERR   {name}: spark raised\n{traceback.format_exc(limit=3)}")
+            print(f"ERR   {name}\n{traceback.format_exc(limit=3)}")
             n_bad += 1
             continue
-        if name not in oracles:
-            print(f"ROWS  {name}: rows={len(sdf)} (no oracle)")
-            n_noracle += 1
-            continue
-        try:
-            odf = con.execute(oracles[name]).fetchdf()
-        except Exception:
-            print(f"ERR   {name}: oracle raised\n{traceback.format_exc(limit=3)}")
+        if report["ok"]:
+            print(f"OK    {name} rows={report['spark_rows']}")
+            n_ok += 1
+        else:
+            print(f"BAD   {name}: {report['issues']}")
             n_bad += 1
-            continue
-        if len(sdf) != len(odf):
-            print(f"ROWS! {name}: spark={len(sdf)} oracle={len(odf)}")
-            n_bad += 1
-            continue
-        if sorted(sdf.columns) != sorted(odf.columns):
-            print(f"SCHEMA {name}: spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}")
-            n_bad += 1
-            continue
-        hs, ho = typed_hash(sdf), typed_hash(odf)
-        if hs != ho:
-            dt_s = {c: str(sdf[c].dtype) for c in sorted(sdf.columns)}
-            dt_o = {c: str(odf[c].dtype) for c in sorted(odf.columns)}
-            print(f"HASH! {name}: dtypes spark={dt_s} oracle={dt_o}")
-            n_bad += 1
-            continue
-        print(f"OK    {name} rows={len(sdf)}")
-        n_ok += 1
     print(f"\nSUMMARY ok={n_ok} bad={n_bad} rows_only={n_noracle}")
     spark.stop()
     return 1 if n_bad else 0

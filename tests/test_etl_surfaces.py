@@ -318,25 +318,41 @@ def test_query_builder_in_between_or_apply(spark):
     assert via_df == via_sql == [(3, "y"), (8, "x")]
 
 
-@pytest.mark.parametrize("value", ["O'Brien", "50%", "a_b"])
-def test_query_builder_contains_is_literal(spark, value):
-    """`contains` matches a literal substring on every render path:
-    quotes, `%` and `_` in the value are not SQL syntax or wildcards,
-    so apply(), Spark on to_sql() and DuckDB on to_sql() agree."""
+@pytest.mark.parametrize(
+    "op,value",
+    [
+        pytest.param("contains", "O'Brien", id="O'Brien"),
+        pytest.param("contains", "50%", id="50%"),
+        pytest.param("contains", "a_b", id="a_b"),
+        pytest.param("contains", "a\\b", id="contains-backslash"),
+        pytest.param("contains", "a\\%b", id="contains-backslash-percent"),
+        pytest.param("contains", "n\\n", id="contains-backslash-n"),
+        pytest.param("=", "a\\b", id="eq-backslash"),
+        pytest.param("=", "a\\\\b", id="eq-double-backslash"),
+        pytest.param("in", ("n\\n", "a\\%b", "O'Brien"), id="in-backslash"),
+    ],
+)
+def test_query_builder_contains_is_literal(spark, op, value):
+    """String values are literal on every render path: quotes, `%`,
+    `_` and backslashes are not SQL syntax, wildcards or escapes, so
+    apply(), Spark on to_sql() and DuckDB on to_sql() agree."""
     import duckdb
 
     rows = [(1, "O'Brien"), (2, "OBrien"), (3, "50%"), (4, "500"),
-            (5, "a_b"), (6, "axb"), (7, "x!y")]
+            (5, "a_b"), (6, "axb"), (7, "x!y"), (8, "a\\b"), (9, "a\\\\b"),
+            (10, "a\\%b"), (11, "n\\n"), (12, "n\n")]
     df = spark.createDataFrame(rows, "id long, s string")
     df.createOrReplaceTempView("qb_contains")
-    spec = QuerySpec(filters=(Filter("s", "contains", value),), order_by=("id",))
+    spec = QuerySpec(filters=(Filter("s", op, value),), order_by=("id",))
     sql = spec.to_sql("qb_contains")
     con = duckdb.connect()
     con.register("qb_contains", pd.DataFrame(rows, columns=["id", "s"]))
     via_df = [tuple(r) for r in spec.apply(df).collect()]
     via_spark = [tuple(r) for r in spark.sql(sql).collect()]
     via_duckdb = [tuple(r) for r in con.execute(sql).fetchall()]
-    assert via_df == via_spark == via_duckdb == [r for r in rows if value in r[1]]
+    match = {"contains": lambda s: value in s, "=": lambda s: s == value,
+             "in": lambda s: s in value}[op]
+    assert via_df == via_spark == via_duckdb == [r for r in rows if match(r[1])]
 
 
 def test_group_zscore(spark):

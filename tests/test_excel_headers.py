@@ -6,14 +6,14 @@ it runs without openpyxl/workbook fixtures)."""
 from __future__ import annotations
 
 from data_frame_demo_etl_spark.sources.readers import (
-    _col_letter,
     _effective_header_row,
     expand_merged_headers,
 )
+from data_frame_demo_etl_spark.sources.xlsx_lite import _col_letters
 
 
 def test_col_letter():
-    assert [_col_letter(i) for i in (1, 2, 26, 27, 52, 53)] == ["A", "B", "Z", "AA", "AZ", "BA"]
+    assert [_col_letters(i) for i in (1, 2, 26, 27, 52, 53)] == ["A", "B", "Z", "AA", "AZ", "BA"]
 
 
 def test_named_merge_propagates_base_value():

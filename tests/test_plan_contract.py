@@ -1,17 +1,18 @@
-"""Plan contract for every driver-window (tier-1) query.
+"""Plan contract for the queries named in the expectation tables below.
 
-One parametrized test holds each windowed plan to the physical shape
-we want at 100 TB:
-- no accidental nested-loop/cartesian join (explicit allowlist for
-  the documented broadcast-query-set / scalar-subquery shapes);
+One parametrized test holds each named query's plan to the physical
+shape we want at 100 TB:
 - predicate pushdown: queries whose WHERE touches pushable base-table
   columns must show them in the scan's PushedFilters;
 - constant dims (region/nation, broadcast query sets) must be
   broadcast, not shuffled;
 - declared scan-count ceilings for single-table aggregates.
 
-If a future change un-pushes a filter, un-broadcasts a dim, or
-introduces a cartesian, this fails with the offending plan.
+Nested-loop/cartesian joins are bounded for every registered query by
+``test_audit_and_scd2.py::test_no_accidental_cartesian_anywhere``.
+
+If a future change un-pushes a filter or un-broadcasts a dim, this
+fails with the offending plan.
 """
 
 from __future__ import annotations
@@ -20,176 +21,6 @@ import pytest
 
 from data_frame_demo_etl_spark import registry
 from data_frame_demo_etl_spark.operators.audit import plan_report
-
-# Queries that intentionally contain a broadcast nested-loop/cross
-# shape, all bounded by construction:
-# - ann gates broadcast a tiny query set against the corpus;
-# - q22 broadcasts a 1-row global-threshold aggregate (scalar
-#   subquery);
-# - text_retrieval joins a broadcast query-term set.
-CARTESIAN_ALLOWED = {
-    "ann_cosine_topk",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "text_retrieval_topk",
-    "q22_idle_rich_customers",
-    # q11 broadcasts a 1-row scalar-aggregate (total + n_parts) for
-    # the outsized-share HAVING — same bounded shape as q22.
-    "q11_important_stock",
-    # gapfill's dense time-grid IS a crossJoin by contract
-    # (analytics/timeseries.py — caller must bound the grid).
-    "events_gapfill",
-    # broadcast-query-set ANN shape inside the fused semantic leg
-    # (similarity/fusion.py — the documented ann_cosine_topk pattern).
-    "retrieval_rrf_fusion",
-    # composes ann_lsh_topk + ann_cosine_topk — both legs are the
-    # bounded broadcast-query-set shape above (similarity/gate.py).
-    "ann_recall_eval",
-    # full + per-truncation-dim brute-force legs plus a constant
-    # (dims × queries) spine — r9 rotation target, listed ahead of the
-    # rotation per the both-allowlists rule (similarity/gate.py).
-    "embeddings_matryoshka_recall",
-    # one broadcast-query-set relevance leg (the ann_cosine_topk
-    # shape) feeding a Q×POOL-bounded greedy rerank (similarity/mmr.py).
-    "embeddings_mmr_rerank",
-    # dense (distinct hours × type vocabulary) spine — the gapfill
-    # bounded-cross contract (analytics/timeseries.py correlation).
-    "events_type_correlation",
-    # crossJoin(broadcast(1-ROW max-timestamp aggregate)) for the
-    # right-censor edge — the q22 bounded-scalar shape
-    # (analytics/survival.py).
-    "users_churn_survival",
-    # dense (groups × bins × 2) spine — constant-size cross join by
-    # construction (analytics/drift.py).
-    "events_value_drift_psi",
-    # type-pair spine (C(T,2) over the type vocabulary) and the
-    # OR-membership join of hashes into their pairs — both bounded by
-    # the type domain, never by users (analytics/cms.py overlap gate).
-    "events_kmv_overlap",
-    # ≤9-digit count table × a 1-row total aggregate — the q22
-    # bounded scalar-subquery shape (analytics/quality_audit.py).
-    "orders_benford_audit",
-    # crossJoin(broadcast(1-row min-count aggregate)) for the
-    # temperature thresholds (operators/gate.py) — bounded scalar.
-    "corpus_temperature_mix",
-    # per-check 1-row count aggregates crossJoined into the audit
-    # report rows (operators/validate.py) — bounded scalars.
-    "star_integrity_audit",
-    # crossJoin(broadcast(1-row total-usage aggregate)) for the final
-    # vocabulary log-probs (functions/unigram.py) — bounded scalar.
-    "unigram_lm_vocab",
-    # composes the trainer above (same bounded 1-row cross) before
-    # encoding — same scalar shape (functions/unigram.py).
-    "docs_unigram_tokens",
-    # --- r10 window rotation: r9b gates now inside the window, each
-    #     already justified in the whole-registry audit allowlist
-    #     (tests/test_audit_and_scd2.py) with the same bounded shape
-    "events_mutual_information",
-    "embeddings_hard_negatives",
-    "customer_segment_target_encoding",
-    "docs_heaps_fit",
-    "events_windowed_psi",
-    # --- r10 additions
-    # exact-baseline leg broadcasts the 10-query set against the
-    # corpus — the documented ann_cosine_topk shape (similarity/ivf.py
-    # ivf_nprobe_recall_sweep).
-    "ann_ivf_nprobe_sweep",
-    # crossJoin(broadcast(1-ROW epoch-midpoint bounds)) then
-    # crossJoin(broadcast(1-ROW theta/global-mean aggregate)) — the
-    # q22 bounded-scalar shape twice (analytics/ml_eval.py).
-    "events_cuped_adjustment",
-    # crossJoin(broadcast(1-ROW A/B-total aggregate)) — bounded scalar
-    # (analytics/drift.py jsd_categorical).
-    "events_jsd_arms",
-    # crossJoins of 1-ROW aggregates (totals × conditional-entropy
-    # scalar) — the mutual-information shape
-    # (analytics/features.py transition_entropy).
-    "events_transition_entropy",
-    # crossJoin(broadcast(1-ROW n/t totals)) — bounded scalar
-    # (analytics/quality_audit.py theil_index).
-    "lineitem_supplier_theil",
-    # full + projected brute-force legs, each a broadcast 10-query set
-    # against the corpus — the ann_cosine_topk shape twice
-    # (similarity/gate.py embeddings_rp_recall).
-    "embeddings_rp_recall",
-    # --- r11 window rotation: r10 second-block gates now inside the
-    #     window, each already justified in the whole-registry audit
-    #     allowlist (tests/test_audit_and_scd2.py) with the same
-    #     bounded shape
-    # crossJoin(broadcast(1-ROW min/max-cents bounds)) for the PSI
-    # binning grid — bounded scalar (analytics/ml_eval.py).
-    "events_value_calibration",
-    # crossJoins of 1-ROW epoch-midpoint + quintile-threshold
-    # aggregates — bounded scalars (analytics/features.py).
-    "customer_rfm_migration",
-    # broadcasts of 1-ROW token/bigram totals onto the vocab-sized PMI
-    # table — the scalar-aggregate shape twice (functions/vocab.py).
-    "docs_collocation_pmi",
-    # broadcast of the 1-ROW corpus token total onto the
-    # (source × vocab) term table (functions/vocab.py).
-    "docs_source_vocab_kl",
-    # crossJoin(broadcast(1-ROW corpus-norm aggregate)) — bounded
-    # scalar (similarity/gate.py centroid_cosine_audit).
-    "embeddings_centroid_drift",
-    # crossJoin(broadcast(1-ROW max-timestamp aggregate)) for the
-    # right-censor edge (analytics/survival.py na_cum_hazard).
-    "users_churn_hazard",
-    # crossJoin of two 1-ROW aggregates (Σx²/t/n × top-8 CRk sums) —
-    # bounded scalars (analytics/quality_audit.py).
-    "customer_concentration",
-    # crossJoins of two 1-ROW quantile aggregates (depth × duration)
-    # (streaming/events.py session_stats).
-    "events_session_stats",
-    # per-source 1-ROW totals crossJoined onto the vocab-sized G²
-    # table — bounded scalars (functions/vocab.py source_keyness).
-    "docs_source_keyness",
-    # crossJoin(broadcast(1-ROW doc total)) onto the vocab-sized
-    # TF-IDF score table — bounded scalar (functions/vocab.py
-    # tfidf_source_terms).
-    "docs_tfidf_terms",
-    # same bounded 1-ROW doc-total crossJoin, bigram form (L29).
-    "docs_keyphrase_terms",
-    # 1-ROW scalar crossJoins (d-min shift, peak hour) — the q22 shape
-    # (analytics/timeseries.py seasonal_strength_hourly).
-    "events_seasonal_strength",
-    # 1-ROW scalar crossJoins (m, k*) — the q22 shape (bh_fdr).
-    "events_ab_fdr",
-    # composes the anchor-PQ ADC leg and the exact brute-force leg,
-    # each the documented broadcast-query-set ann_cosine_topk shape
-    # (similarity/pq.py pq_recall_eval_gate) — entered the window in
-    # the r12 rotation.
-    "pq_recall_eval",
-    # crossJoin(broadcast(1-ROW corpus totals)) onto the
-    # group-size histogram — bounded scalar (dedup/novelty.py).
-    "docs_duplication_profile",
-    # crossJoin(broadcast(1-ROW rank-variance scalars)) — the K42
-    # bounded-scalar shape globalized (analytics/quality_audit.py).
-    "events_kruskal_wallis",
-    # --- r11 additions
-    # broadcast-query-set ANN shape (X1's documented pattern): corpus
-    # × 10-row broadcast query set (similarity/pq.py).
-    "pq_adc_topk",
-    # crossJoin(broadcast(1-ROW max-timestamp aggregate)) for the
-    # right-censor edge (analytics/survival.py logrank_test).
-    "users_churn_logrank",
-    # crossJoin(broadcast(1-ROW L1-total aggregate)) per
-    # normalization — bounded scalar ×4 (analytics/hits.py).
-    "graph_hits",
-    # crossJoin(broadcast(1-ROW bounds)) for the forecast grid, then
-    # crossJoin(broadcast(1-ROW totals)) onto the ≤n_bins bin table —
-    # bounded scalars (analytics/ml_eval.py brier_decomposition).
-    "events_brier_decomposition",
-    # dense (QI-classes × band-domain) spine + 1-ROW (N, m) scalar —
-    # bounded by value domains (operators/validate.py t_closeness).
-    "customer_t_closeness",
-    # --- r12 in-window _keyed_prefix consumers: the in-plan offsets
-    # carry a crossJoin(broadcast(1-ROW offset-count guard)) — the q22
-    # bounded-scalar shape; the guard is what enforces the helper's
-    # low-cardinality contract (analytics/quality_audit.py).
-    "events_value_pr_curve",
-    "events_cliffs_delta",
-    "events_dwell_transitions",
-}
 
 # name -> substrings that must each appear in some PushedFilters entry.
 PUSHED = {
@@ -208,7 +39,7 @@ PUSHED = {
     # is no event_type pushdown — the contract is the 1-scan ceiling
     # below instead.
     "loyal_customers_intersect": ["o_orderdate"],
-    # round-4 window additions
+    # round-4 additions
     "q3_shipping_priority": ["o_orderdate", "l_shipdate"],
     "q6_revenue_forecast": ["l_shipdate"],
     "query_builder_filter": ["p_brand", "p_size"],
@@ -238,19 +69,10 @@ MAX_SCANS = {
 }
 
 
-def test_tier1_window_is_fifty():
-    assert len(registry.TIER1_NAMES) == 50
-
-
-@pytest.mark.parametrize("name", registry.TIER1_NAMES)
+@pytest.mark.parametrize("name", sorted(PUSHED.keys() | BROADCASTS.keys() | MAX_SCANS.keys()))
 def test_plan_contract(spark, sf_dir, name):
     df = registry.queries()[name](spark, sf_dir)
     rep = plan_report(df)
-
-    if name not in CARTESIAN_ALLOWED:
-        assert rep.nested_loop_joins == 0, (
-            f"{name}: nested-loop/cartesian join in plan\n{rep.raw[:4000]}"
-        )
 
     for col in PUSHED.get(name, ()):
         assert any(col in f for f in rep.pushed_filters), (
@@ -271,7 +93,7 @@ def test_plan_contract(spark, sf_dir, name):
         )
 
 
-# --- round-4 additions (registered outside the rotated window) -----------
+# --- round-4 additions --------------------------------------------------
 
 def test_packing_plan_prunes_and_single_scan(spark, sf_dir):
     """docs_sequence_packing: one documents scan, pruned to the two
@@ -307,7 +129,7 @@ def test_cluster_minhash_plan_no_cartesian(spark, sf_dir):
     assert rep.nested_loop_joins == 0, rep.raw[:2000]
 
 
-# --- round-5 additions (registered outside the rotated window) -----------
+# --- round-5 additions --------------------------------------------------
 
 def test_keep_best_plan_prunes_and_no_cartesian(spark, sf_dir):
     """dedup_clusters_keep_best: the quality join must not widen the
@@ -351,7 +173,7 @@ def test_llm_keep_best_plan_no_cartesian(spark, sf_dir):
     assert rep.nested_loop_joins == 0, rep.raw[:2000]
 
 
-# --- round-5 additions (registered outside the rotated window) -----------
+# --- round-5 additions --------------------------------------------------
 
 def test_ohlc_plan_single_shuffle_and_pruned(spark, sf_dir):
     """events_ohlc_hourly: the window and the groupBy share the

@@ -95,80 +95,3 @@ def test_foreachbatch_cdc_upsert(spark, tmp_path):
     final = spark.read.parquet(str(tmp_path / "snap_0"))
     got = {(r.k, r.name, r.val) for r in final.collect()}
     assert got == {(1, "a", 11.0), (3, "c", 30.0)}
-
-
-def test_transform_with_state_sessionizer_matches_legacy(spark, tmp_path):
-    """ST3 on the Spark-4 transformWithState API: the StatefulProcessor
-    sessionizer must emit exactly what the applyInPandasWithState
-    sessionizer emits on the same micro-batched input (which is itself
-    pinned to the batch oracle elsewhere). transformWithState requires
-    the RocksDB state store (conf scoped to this test) and the
-    protobuf package (its driver worker speaks a protobuf state
-    protocol) — without protobuf the query crashes at init, so skip."""
-    import datetime as dt
-
-    import pytest as _pytest
-
-    _pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's driver worker requires protobuf",
-    )
-
-    from data_frame_demo_etl_spark.streaming.stateful import (
-        sessionize_stateful,
-        sessionize_stateful_tws,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (1, t0, 10, "view", 1.0, ""),
-        (2, t0 + dt.timedelta(minutes=5), 10, "click", 2.0, ""),
-        (3, t0 + dt.timedelta(minutes=60), 10, "view", 3.0, ""),
-        (4, t0 + dt.timedelta(minutes=62), 10, "view", 4.0, ""),
-        (5, t0 + dt.timedelta(minutes=140), 10, "view", 6.0, ""),  # closes session 2
-        (6, t0, 20, "view", 5.0, ""),
-        (7, t0 + dt.timedelta(minutes=90), 20, "click", 7.0, ""),  # closes user 20 s1
-    ]
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    src = str(tmp_path / "events_in")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-
-        def run(factory, name):
-            stream = spark.readStream.schema(schema).parquet(src).withWatermark(
-                "ts", "10 minutes"
-            )
-            q = (
-                factory(stream, 30)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return sorted(
-                tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()
-            )
-
-        got_tws = run(sessionize_stateful_tws, "tws_sessions")
-        got_legacy = run(sessionize_stateful, "legacy_sessions")
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    assert got_tws == got_legacy
-    # closed within the single batch: user 10's sessions 1 and 2,
-    # user 20's session 1; both trailing sessions stay open in state.
-    assert len(got_tws) == 3
