@@ -127,8 +127,7 @@ def _cmd_query(args) -> int:
     for r in rows:
         print(json.dumps(r.asDict(), default=str))
     if args.oracle:
-        sql = registry.oracle_sql().get(args.name)
-        print(json.dumps({"oracle_sql": sql or "rows-only (no SQL oracle)"}))
+        print(json.dumps({"oracle_sql": registry.oracle_sql()[args.name]}))
     return 0
 
 

@@ -441,31 +441,6 @@ def split_leakage_check_doclevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SPLIT_LEAKAGE_CHECK_DOCLEVEL_SQL = (
-    "WITH "
-    + _MINHASH_PAIR_CTES.strip()
-    + r""",
-pairs AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.8),
-labels AS (
-  SELECT doc_id,
-         CASE WHEN SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccc' THEN 'train'
-              WHEN SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 8) < 'e6666666' THEN 'val'
-              ELSE 'test' END AS split
-  FROM documents
-)
-SELECT LEAST(la.split, lb.split) AS split_a,
-       GREATEST(la.split, lb.split) AS split_b,
-       la.split != lb.split AS is_leak,
-       COUNT(*) AS n_pairs
-FROM pairs
-JOIN labels la ON la.doc_id = id_a
-JOIN labels lb ON lb.doc_id = id_b
-GROUP BY 1, 2, 3
-ORDER BY split_a, split_b, is_leak
-"""
-)
-
-
 def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature-collapsed train/val/test contamination audit: assign
     a deterministic 80/10/10 split (engine-portable md5-prefix key,

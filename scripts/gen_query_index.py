@@ -55,7 +55,8 @@ REQUIRES = {
 }
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md as generated from the registry."""
     oracles = registry.oracle_sql()
     lines = [
         "# Query index",
@@ -78,12 +79,14 @@ def main() -> None:
         mod = fn.__module__.replace("data_frame_demo_etl_spark.", "")
         doc = (fn.__doc__ or "").strip().splitlines()
         summary = doc[0].strip() if doc else ""
-        oracle = "SQL" if name in oracles else "rows-only"
         req = REQUIRES.get(name, "—")
-        lines.append(f"| `{name}` | {mod} | {oracle} | {req} | {summary} |")
-    Path(__file__).resolve().parents[1].joinpath("QUERIES.md").write_text(
-        "\n".join(lines) + "\n", encoding="utf-8"
-    )
+        lines.append(f"| `{name}` | {mod} | SQL | {req} | {summary} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    out = Path(__file__).resolve().parents[1] / "QUERIES.md"
+    out.write_text(render(), encoding="utf-8")
     print(f"wrote QUERIES.md with {len(registry.queries())} entries")
 
 

@@ -1,6 +1,6 @@
-"""Generated-docs drift guard: the inputs of `make docs` must agree
-with the registry, so a stale entry fails the suite rather than only
-a manual docs run."""
+"""Generated-docs drift guard: the inputs and output of `make docs`
+must agree with the registry, so a stale entry fails the suite rather
+than only a manual docs run."""
 
 from __future__ import annotations
 
@@ -20,6 +20,8 @@ def _load_script(name: str):
 
 
 def test_query_index_inputs_match_registry():
-    requires = _load_script("gen_query_index").REQUIRES
-    assert sorted(set(requires) - set(registry.queries())) == []
+    gen = _load_script("gen_query_index")
+    assert sorted(set(gen.REQUIRES) - set(registry.queries())) == []
     assert _load_script("check_counts").main() == 0
+    committed = (SCRIPTS.parent / "QUERIES.md").read_text(encoding="utf-8")
+    assert gen.render() == committed, "QUERIES.md is stale: run scripts/gen_query_index.py"

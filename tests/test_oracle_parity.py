@@ -1,6 +1,5 @@
-"""The correctness gate, locally: every registered query with an
-oracle must match DuckDB exactly at sf0.01 (same comparison the driver
-runs); oracle-less queries must at least run and return rows.
+"""The correctness gate, locally: every registered query must match
+its DuckDB oracle exactly at sf0.01 (same comparison the driver runs).
 
 r13 shape: ONE sweep test fanning the 289 queries over a small thread
 pool instead of 289 parametrized cases run serially. The asserted
